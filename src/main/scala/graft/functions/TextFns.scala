@@ -31,10 +31,6 @@ object TextFns {
   /** Whitespace tokens of the normalized text. */
   def tokens(text: Column): Column = split(normalize(text), " ")
 
-  /** BPE-ish subword count: letter runs, digit runs, single other glyphs. */
-  def bpeTokenCount(text: Column): Column =
-    size(regexp_extract_all(text, lit("[a-z]+|[0-9]+|[^a-z0-9 ]"), lit(0)))
-
   val stopwords = Seq("the", "a", "of", "and", "to", "in", "is", "on", "for", "with")
 
   /** Count of stopword tokens (quality-scoring signal). */

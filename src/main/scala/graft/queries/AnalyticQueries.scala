@@ -16,81 +16,6 @@ object AnalyticQueries {
 
   private val BIG_ORDER_QTY = 250 // q116: large-volume order threshold
 
-  /** q137's per-JVM warehouse root. STABLE across invocations on purpose:
-    * Spark caches catalog plugins by name after first load, so the catalog
-    * conf must keep pointing at the same path — each run wipes the
-    * CONTENTS and rewrites, and the finally-wipe leaves nothing behind
-    * (the q134 temp-dir discipline).
-    */
-  private lazy val q137Root: java.nio.file.Path =
-    java.nio.file.Files.createTempDirectory("graft-q137")
-
-  /** q143's per-JVM warehouse root — same stable-path discipline. */
-  private lazy val q143Root: java.nio.file.Path =
-    java.nio.file.Files.createTempDirectory("graft-q143")
-
-  /** q138's per-JVM warehouse root — same stable-path discipline. */
-  private lazy val q138Root: java.nio.file.Path =
-    java.nio.file.Files.createTempDirectory("graft-q138")
-
-  /** q139's per-JVM warehouse root — same stable-path discipline. */
-  private lazy val q139Root: java.nio.file.Path =
-    java.nio.file.Files.createTempDirectory("graft-q139")
-
-  /** q140's per-JVM warehouse root — same stable-path discipline. */
-  private lazy val q140Root: java.nio.file.Path =
-    java.nio.file.Files.createTempDirectory("graft-q140")
-
-  /** q141's per-JVM warehouse root — same stable-path discipline. */
-  private lazy val q141Root: java.nio.file.Path =
-    java.nio.file.Files.createTempDirectory("graft-q141")
-
-  /** q146's per-JVM warehouse root — same stable-path discipline. */
-  private lazy val q146Root: java.nio.file.Path =
-    java.nio.file.Files.createTempDirectory("graft-q146")
-
-  /** q147's per-JVM warehouse root — same stable-path discipline. */
-  private lazy val q147Root: java.nio.file.Path =
-    java.nio.file.Files.createTempDirectory("graft-q147")
-
-  /** q148's per-JVM warehouse root — same stable-path discipline. */
-  private lazy val q148Root: java.nio.file.Path =
-    java.nio.file.Files.createTempDirectory("graft-q148")
-
-  /** q149's per-JVM warehouse + watch + checkpoint root — same discipline. */
-  private lazy val q149Root: java.nio.file.Path =
-    java.nio.file.Files.createTempDirectory("graft-q149")
-
-  /** q150's per-JVM warehouse root — same stable-path discipline. */
-  private lazy val q150Root: java.nio.file.Path =
-    java.nio.file.Files.createTempDirectory("graft-q150")
-
-  /** q152's per-JVM warehouse root — same stable-path discipline. */
-  private lazy val q152Root: java.nio.file.Path =
-    java.nio.file.Files.createTempDirectory("graft-q152")
-
-  /** q153's per-JVM warehouse root — same stable-path discipline. */
-  private lazy val q153Root: java.nio.file.Path =
-    java.nio.file.Files.createTempDirectory("graft-q153")
-
-  /** q154's per-JVM warehouse root — same stable-path discipline. */
-  private lazy val q154Root: java.nio.file.Path =
-    java.nio.file.Files.createTempDirectory("graft-q154")
-
-  /** q157's per-JVM warehouse root — same stable-path discipline. */
-  private lazy val q157Root: java.nio.file.Path =
-    java.nio.file.Files.createTempDirectory("graft-q157")
-
-  /** q158's per-JVM warehouse root — same stable-path discipline. */
-  private lazy val q158Root: java.nio.file.Path =
-    java.nio.file.Files.createTempDirectory("graft-q158")
-
-  /** q155's per-JVM warehouse root — same stable-path discipline. */
-  private lazy val q155Root: java.nio.file.Path =
-    java.nio.file.Files.createTempDirectory("graft-q155")
-
-  // wipe: the shared stable-path helper lives in Tables (imported above)
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // TPC-H Q1 shape: single-pass grouped scan of the biggest fact. Partial
     // aggregation (map-side combine) keeps shuffle rows = #groups, not #rows.
@@ -142,22 +67,18 @@ object AnalyticQueries {
     // bucketed table build (the amortized write that buys shuffle-free
     // serving), mirroring q134's index-build accounting.
     "q137_bucketed_colocated_join" -> { (s, dir) =>
-      import graft.sink.Warehouse
       val conf = s.conf
       val savedConfs = Seq(
         "spark.sql.sources.v2.bucketing.enabled",
         "spark.sql.sources.v2.bucketing.pushPartValues.enabled",
         "spark.sql.autoBroadcastJoinThreshold").map(k => k -> conf.getOption(k))
-      wipe(q137Root)
+      val wh = stableWarehouse(s, "gq137")
       try {
         conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
         conf.set("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
         // force a real join of both sides: broadcasting the dim would bypass
         // the exchange this query exists to prove away
         conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        conf.set("spark.sql.catalog.gq137", classOf[graft.catalog.GraftCatalog].getName)
-        conf.set("spark.sql.catalog.gq137.root", q137Root.toString)
-        val wh = new Warehouse(s, q137Root.toString)
         val o = read(s, dir, "orders").select("o_orderkey", "o_orderpriority")
         val li = read(s, dir, "lineitem")
           .select("l_orderkey", "l_quantity", "l_extendedprice", "l_discount")
@@ -180,7 +101,7 @@ object AnalyticQueries {
           case (k, Some(v)) => conf.set(k, v)
           case (k, None)    => conf.unset(k)
         }
-        wipe(q137Root)
+        wipe(stableRoot("gq137"))
       }
     },
 
@@ -196,15 +117,11 @@ object AnalyticQueries {
     // analog), vs a full-table scan — the per-iteration cost here is
     // deliberately the BUILD (append with stats), q134/q137's accounting.
     "q146_metadata_aggregates" -> { (s, dir) =>
-      import graft.sink.Warehouse
       val conf = s.conf
-      wipe(q146Root)
+      val wh = stableWarehouse(s, "gq146")
       try {
-        conf.set("spark.sql.catalog.gq146", classOf[graft.catalog.GraftCatalog].getName)
-        conf.set("spark.sql.catalog.gq146.root", q146Root.toString)
         val li = read(s, dir, "lineitem")
           .select("l_orderkey", "l_quantity", "l_returnflag", "l_shipdate")
-        val wh = new Warehouse(s, q146Root.toString)
         wh.create("li", org.apache.spark.sql.types.StructType(
           li.schema.fields.map(_.copy(nullable = true))))
         wh.append("li", li,
@@ -218,7 +135,7 @@ object AnalyticQueries {
             |FROM gq146.li""".stripMargin)
           .localCheckpoint()
       } finally {
-        wipe(q146Root)
+        wipe(stableRoot("gq146"))
       }
     },
 
@@ -234,14 +151,10 @@ object AnalyticQueries {
     // iteration by design (q146's accounting); both sort directions serve
     // from the same build to pin asc and desc thresholds.
     "q152_topk_prune" -> { (s, dir) =>
-      import graft.sink.Warehouse
-      wipe(q152Root)
+      val wh = stableWarehouse(s, "gq152")
       try {
-        s.conf.set("spark.sql.catalog.gq152", classOf[graft.catalog.GraftCatalog].getName)
-        s.conf.set("spark.sql.catalog.gq152.root", q152Root.toString)
         val o = read(s, dir, "orders")
           .select("o_orderkey", "o_totalprice", "o_orderpriority")
-        val wh = new Warehouse(s, q152Root.toString)
         wh.create("ord", org.apache.spark.sql.types.StructType(
           o.schema.fields.map(_.copy(nullable = true))))
         // range-cluster on the sort key: files become near-disjoint price
@@ -257,7 +170,7 @@ object AnalyticQueries {
         top.unionAll(bottom)
           .orderBy(col("side").asc, col("o_orderkey").asc)
           .localCheckpoint()
-      } finally wipe(q152Root)
+      } finally wipe(stableRoot("gq152"))
     },
 
     // LIKE-prefix file pruning under the oracle (q155): a warehouse table
@@ -270,13 +183,9 @@ object AnalyticQueries {
     // 100 TB shape: URL-prefix / date-string-prefix scans over a
     // name-clustered corpus read O(matching range) files.
     "q155_prefix_prune" -> { (s, dir) =>
-      import graft.sink.Warehouse
-      wipe(q155Root)
+      val wh = stableWarehouse(s, "gq155")
       try {
-        s.conf.set("spark.sql.catalog.gq155", classOf[graft.catalog.GraftCatalog].getName)
-        s.conf.set("spark.sql.catalog.gq155.root", q155Root.toString)
         val p = read(s, dir, "part").select("p_partkey", "p_name", "p_retailprice")
-        val wh = new Warehouse(s, q155Root.toString)
         wh.create("part", org.apache.spark.sql.types.StructType(
           p.schema.fields.map(_.copy(nullable = true))))
         wh.append("part", p, statsCols = Seq("p_name", "p_partkey"),
@@ -287,7 +196,7 @@ object AnalyticQueries {
             |FROM gq155.part WHERE p_name LIKE 'l%'
             |GROUP BY 1 ORDER BY 1""".stripMargin)
           .localCheckpoint()
-      } finally wipe(q155Root)
+      } finally wipe(stableRoot("gq155"))
     },
 
     // Grouped metadata aggregates under the oracle (q154): GROUP BY over an
@@ -312,16 +221,12 @@ object AnalyticQueries {
     // size (StatsAggSpec pins the plan shape and the non-aligned bail).
     // The commonest reporting shape on a time-partitioned 100 TB table.
     "q157_transform_grouped_agg" -> { (s, dir) =>
-      import graft.sink.Warehouse
-      wipe(q157Root)
+      val wh = stableWarehouse(s, "gq157")
       try {
-        s.conf.set("spark.sql.catalog.gq157", classOf[graft.catalog.GraftCatalog].getName)
-        s.conf.set("spark.sql.catalog.gq157.root", q157Root.toString)
         // parquet ms-timestamps read as NTZ; UTC session makes the cast the
         // identity (the engine-wide convention — skill-documented)
         val o = read(s, dir, "orders").select(col("o_orderkey"),
           col("o_orderdate").cast("timestamp").as("o_orderdate"), col("o_totalprice"))
-        val wh = new Warehouse(s, q157Root.toString)
         wh.create("ord", org.apache.spark.sql.types.StructType(
           o.schema.fields.map(_.copy(nullable = true))), Seq("years(o_orderdate)"))
         wh.append("ord", o, statsCols = Seq("o_orderkey", "o_totalprice"))
@@ -331,7 +236,7 @@ object AnalyticQueries {
             |  min(o_totalprice) AS mn_p, max(o_totalprice) AS mx_p
             |FROM gq157.ord GROUP BY year(o_orderdate) ORDER BY yr""".stripMargin)
           .localCheckpoint()
-      } finally wipe(q157Root)
+      } finally wipe(stableRoot("gq157"))
     },
 
     // INCREMENTAL ANALYZE (q158): analyze half the customers, append the
@@ -343,15 +248,13 @@ object AnalyticQueries {
     // 100 TB shape: ANALYZE joins the O(batch) maintenance family — stats
     // refresh costs one pass over the ingest, never a table rescan.
     "q158_incremental_analyze" -> { (s, dir) =>
-      import graft.sink.Warehouse
-      wipe(q158Root)
+      val wh = stableWarehouse(s, "q158", catalog = false)
       try {
         val cust = read(s, dir, "customer")
           .select(col("c_custkey"),
             // inject nulls deterministically so null counts carry signal
             when(col("c_custkey") % 7 === 0, lit(null)).otherwise(col("c_name")).as("c_name"),
             col("c_acctbal"))
-        val wh = new Warehouse(s, q158Root.toString)
         wh.create("c", org.apache.spark.sql.types.StructType(
           graft.schema.SchemaOps.widenSchema(cust.schema).fields.map(_.copy(nullable = true))))
         wh.append("c", cust.filter(col("c_custkey") % 2 === 0), statsCols = Seq("c_custkey"))
@@ -363,18 +266,14 @@ object AnalyticQueries {
           r.stats.cols.toSeq.map { case (c, e) => (c, e.nullCount, e.maxLen) }
         s.createDataFrame(rows).toDF("col", "n", "max_len")
           .orderBy("col").localCheckpoint()
-      } finally wipe(q158Root)
+      } finally wipe(stableRoot("q158"))
     },
 
     "q154_grouped_metadata_agg" -> { (s, dir) =>
-      import graft.sink.Warehouse
-      wipe(q154Root)
+      val wh = stableWarehouse(s, "gq154")
       try {
-        s.conf.set("spark.sql.catalog.gq154", classOf[graft.catalog.GraftCatalog].getName)
-        s.conf.set("spark.sql.catalog.gq154.root", q154Root.toString)
         val li = read(s, dir, "lineitem")
           .select("l_returnflag", "l_orderkey", "l_quantity", "l_shipdate")
-        val wh = new Warehouse(s, q154Root.toString)
         wh.create("li", org.apache.spark.sql.types.StructType(
           li.schema.fields.map(_.copy(nullable = true))), Seq("l_returnflag"))
         wh.append("li", li,
@@ -386,7 +285,7 @@ object AnalyticQueries {
             |  min(l_shipdate) AS mn_ship, max(l_shipdate) AS mx_ship
             |FROM gq154.li GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)
           .localCheckpoint()
-      } finally wipe(q154Root)
+      } finally wipe(stableRoot("gq154"))
     },
 
     // Bloom point-lookup index under the oracle (q153): per-file Bloom
@@ -400,15 +299,11 @@ object AnalyticQueries {
     // parquet. The 100 TB shape: point lookups on an unclustered key read
     // O(probes) files instead of the table.
     "q153_bloom_point_lookup" -> { (s, dir) =>
-      import graft.sink.Warehouse
-      wipe(q153Root)
+      val wh = stableWarehouse(s, "gq153")
       try {
-        s.conf.set("spark.sql.catalog.gq153", classOf[graft.catalog.GraftCatalog].getName)
-        s.conf.set("spark.sql.catalog.gq153.root", q153Root.toString)
         val o = read(s, dir, "orders")
           .select(md5(col("o_orderkey").cast("string")).as("h"),
             col("o_orderkey"), col("o_totalprice"))
-        val wh = new Warehouse(s, q153Root.toString)
         wh.create("ord", org.apache.spark.sql.types.StructType(
           o.schema.fields.map(_.copy(nullable = true))))
         wh.append("ord", o, statsCols = Seq("h", "o_orderkey"))
@@ -420,7 +315,7 @@ object AnalyticQueries {
                  |WHERE h IN (${probes.map(p => s"'$p'").mkString(",")})
                  |ORDER BY o_orderkey""".stripMargin)
           .localCheckpoint()
-      } finally wipe(q153Root)
+      } finally wipe(stableRoot("gq153"))
     },
 
     // Partition-spec evolution under the oracle (q143): q137's bucketed
@@ -437,20 +332,16 @@ object AnalyticQueries {
     // grown table is one metadata write, rewrite IO is deferred to
     // compaction, and no serving window ever returns wrong rows.
     "q143_spec_evolution_join" -> { (s, dir) =>
-      import graft.sink.Warehouse
       val conf = s.conf
       val savedConfs = Seq(
         "spark.sql.sources.v2.bucketing.enabled",
         "spark.sql.sources.v2.bucketing.pushPartValues.enabled",
         "spark.sql.autoBroadcastJoinThreshold").map(k => k -> conf.getOption(k))
-      wipe(q143Root)
+      val wh = stableWarehouse(s, "gq143")
       try {
         conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
         conf.set("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
         conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        conf.set("spark.sql.catalog.gq143", classOf[graft.catalog.GraftCatalog].getName)
-        conf.set("spark.sql.catalog.gq143.root", q143Root.toString)
-        val wh = new Warehouse(s, q143Root.toString)
         val o = read(s, dir, "orders").select("o_orderkey", "o_orderpriority")
         val li = read(s, dir, "lineitem")
           .select("l_orderkey", "l_quantity", "l_extendedprice", "l_discount")
@@ -480,7 +371,7 @@ object AnalyticQueries {
           case (k, Some(v)) => conf.set(k, v)
           case (k, None)    => conf.unset(k)
         }
-        wipe(q143Root)
+        wipe(stableRoot("gq143"))
       }
     },
 
@@ -496,18 +387,14 @@ object AnalyticQueries {
     // standard star-join shape: dim filters prune fact scans at runtime,
     // which no static pruning can do.
     "q138_runtime_pruned_join" -> { (s, dir) =>
-      import graft.sink.Warehouse
       val conf = s.conf
       val savedConfs = Seq(
         "spark.sql.optimizer.dynamicPartitionPruning.useStats").map(k => k -> conf.getOption(k))
-      wipe(q138Root)
+      val wh = stableWarehouse(s, "gq138")
       try {
         // v2 relations carry no row-count stats; the fallback-ratio
         // heuristic is what decides DPP for a fresh catalog in production
         conf.set("spark.sql.optimizer.dynamicPartitionPruning.useStats", "false")
-        conf.set("spark.sql.catalog.gq138", classOf[graft.catalog.GraftCatalog].getName)
-        conf.set("spark.sql.catalog.gq138.root", q138Root.toString)
-        val wh = new Warehouse(s, q138Root.toString)
         val li = read(s, dir, "lineitem")
           .select("l_orderkey", "l_extendedprice", "l_discount", "l_returnflag")
         val o = read(s, dir, "orders")
@@ -529,7 +416,7 @@ object AnalyticQueries {
           case (k, Some(v)) => conf.set(k, v)
           case (k, None)    => conf.unset(k)
         }
-        wipe(q138Root)
+        wipe(stableRoot("gq138"))
       }
     },
 
@@ -543,10 +430,8 @@ object AnalyticQueries {
     // pays the rewrite later, off-peak (PositionalDeleteSpec pins shielding,
     // materialization, rename survival, and CDC exactness).
     "q139_positional_delete" -> { (s, dir) =>
-      import graft.sink.Warehouse
-      wipe(q139Root)
+      val wh = stableWarehouse(s, "q139", catalog = false)
       try {
-        val wh = new Warehouse(s, q139Root.toString)
         val o = read(s, dir, "orders")
           .select("o_orderkey", "o_orderstatus", "o_orderpriority", "o_totalprice")
         wh.append("orders_m", o, statsCols = Seq("o_totalprice"))
@@ -558,7 +443,7 @@ object AnalyticQueries {
             dsum(col("o_totalprice")).as("total"))
           .orderBy("o_orderpriority")
           .localCheckpoint()
-      } finally wipe(q139Root)
+      } finally wipe(stableRoot("q139"))
     },
 
     // Branch write-audit-publish under the oracle (q147): half the orders
@@ -574,10 +459,8 @@ object AnalyticQueries {
     // 100 TB this is the audited-backfill workflow: build and validate N
     // commits beside production, publish by pointer swap.
     "q147_branch_wap" -> { (s, dir) =>
-      import graft.sink.Warehouse
-      wipe(q147Root)
+      val wh = stableWarehouse(s, "q147", catalog = false)
       try {
-        val wh = new Warehouse(s, q147Root.toString)
         val o = read(s, dir, "orders")
           .select("o_orderkey", "o_orderstatus", "o_totalprice")
         wh.create("ord", org.apache.spark.sql.types.StructType(
@@ -599,7 +482,7 @@ object AnalyticQueries {
           .withColumn("main_pre_publish", lit(mainPre))
           .orderBy("o_orderstatus")
           .localCheckpoint()
-      } finally wipe(q147Root)
+      } finally wipe(stableRoot("q147"))
     },
 
     // Atomic CTAS under the oracle (q148): `CREATE OR REPLACE TABLE ... AS
@@ -611,12 +494,8 @@ object AnalyticQueries {
     // between "a reader can observe the empty half-created table" and
     // publish-or-nothing.
     "q148_atomic_ctas" -> { (s, dir) =>
-      import graft.sink.Warehouse
-      wipe(q148Root)
+      val wh = stableWarehouse(s, "gq148")
       try {
-        s.conf.set("spark.sql.catalog.gq148", classOf[graft.catalog.GraftCatalog].getName)
-        s.conf.set("spark.sql.catalog.gq148.root", q148Root.toString)
-        val wh = new Warehouse(s, q148Root.toString)
         wh.replace("ord_src",
           read(s, dir, "orders").select("o_orderkey", "o_orderpriority", "o_totalprice"))
         s.sql(
@@ -630,7 +509,7 @@ object AnalyticQueries {
           .withColumn("n_commits", lit(nCommits))
           .orderBy("o_orderpriority")
           .localCheckpoint()
-      } finally wipe(q148Root)
+      } finally wipe(stableRoot("gq148"))
     },
 
     // Streaming table sink under the oracle (q149): two disjoint parquet
@@ -643,10 +522,11 @@ object AnalyticQueries {
     // DuckDB sees the latest-state CASE form over raw orders.
     "q149_stream_sink_upsert" -> { (s, dir) =>
       import graft.sink.Warehouse
-      wipe(q149Root)
+      val root = stableRoot("q149")
+      wipe(root)
       try {
-        val watch = q149Root.resolve("watch").toString
-        val whRoot = q149Root.resolve("wh").toString
+        val watch = root.resolve("watch").toString
+        val whRoot = root.resolve("wh").toString
         val o = read(s, dir, "orders")
           .select("o_orderkey", "o_orderstatus", "o_totalprice")
         o.filter(col("o_orderkey") % 2 === 0)
@@ -661,7 +541,7 @@ object AnalyticQueries {
           .format("graft.streaming.GraftSinkProvider")
           .option("root", whRoot).option("table", "orders_s")
           .option("disposition", "upsert").option("keys", "o_orderkey")
-          .option("checkpointLocation", q149Root.resolve("cp").toString)
+          .option("checkpointLocation", root.resolve("cp").toString)
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
         require(q.awaitTermination(300000), "q149 stream did not drain")
         q.stop()
@@ -670,7 +550,7 @@ object AnalyticQueries {
           .agg(count(lit(1)).as("n_orders"), dsum(col("o_totalprice")).as("total"))
           .orderBy("o_orderstatus")
           .localCheckpoint()
-      } finally wipe(q149Root)
+      } finally wipe(stableRoot("q149"))
     },
 
     // Persisted SQL views under the oracle (q150): CREATE OR REPLACE VIEW
@@ -681,12 +561,8 @@ object AnalyticQueries {
     // results. DuckDB adjudicates against the same aggregate over raw
     // parquet.
     "q150_sql_view" -> { (s, dir) =>
-      import graft.sink.Warehouse
-      wipe(q150Root)
+      val wh = stableWarehouse(s, "gq150")
       try {
-        s.conf.set("spark.sql.catalog.gq150", classOf[graft.catalog.GraftCatalog].getName)
-        s.conf.set("spark.sql.catalog.gq150.root", q150Root.toString)
-        val wh = new Warehouse(s, q150Root.toString)
         val o = read(s, dir, "orders").select("o_orderkey", "o_orderpriority", "o_totalprice")
         wh.replace("ord_v", o.filter(col("o_orderkey") % 2 === 0))
         s.sql(
@@ -700,7 +576,7 @@ object AnalyticQueries {
         s.sql("SELECT o_orderpriority, n_orders, total FROM gq150.ord_view")
           .orderBy("o_orderpriority")
           .localCheckpoint()
-      } finally wipe(q150Root)
+      } finally wipe(stableRoot("gq150"))
     },
 
     // MOR upsert under the oracle (q140): the merge-on-read ingest path —
@@ -714,10 +590,8 @@ object AnalyticQueries {
     // ingest path (MorMergeSpec pins merge-equivalence, replay convergence,
     // O(batch) manifests, and CDC exactness).
     "q140_mor_upsert" -> { (s, dir) =>
-      import graft.sink.Warehouse
-      wipe(q140Root)
+      val wh = stableWarehouse(s, "q140", catalog = false)
       try {
-        val wh = new Warehouse(s, q140Root.toString)
         val o = read(s, dir, "orders")
           .select("o_orderkey", "o_orderstatus", "o_totalprice")
         wh.replace("orders_u", o, Seq("o_orderkey"))
@@ -729,7 +603,7 @@ object AnalyticQueries {
           .agg(count(lit(1)).as("n_orders"), dsum(col("o_totalprice")).as("total"))
           .orderBy("o_orderstatus")
           .localCheckpoint()
-      } finally wipe(q140Root)
+      } finally wipe(stableRoot("q140"))
     },
 
     // MOR UPDATE under the oracle (q141): positionUpdate commits the
@@ -744,10 +618,8 @@ object AnalyticQueries {
     // path (PositionalDeleteSpec pins swap semantics, chained composition,
     // and no-resurrection).
     "q141_mor_update" -> { (s, dir) =>
-      import graft.sink.Warehouse
-      wipe(q141Root)
+      val wh = stableWarehouse(s, "q141", catalog = false)
       try {
-        val wh = new Warehouse(s, q141Root.toString)
         val o = read(s, dir, "orders")
           .select("o_orderkey", "o_orderstatus", "o_totalprice")
         wh.append("orders_pu", o, statsCols = Seq("o_totalprice"))
@@ -759,7 +631,7 @@ object AnalyticQueries {
           .agg(count(lit(1)).as("n_orders"), dsum(col("o_totalprice")).as("total"))
           .orderBy("o_orderstatus")
           .localCheckpoint()
-      } finally wipe(q141Root)
+      } finally wipe(stableRoot("q141"))
     },
 
     // TPC-H Q17 shape: "small-quantity" lineitems vs their part's average —

@@ -14,43 +14,6 @@ import Tables._
   */
 object EtlQueries {
 
-  /** q151's per-JVM warehouse root — the stable-path discipline
-    * (AnalyticQueries.q137Root): catalog plugins are cached by name, so the
-    * root conf must never change; each run wipes the contents instead.
-    */
-  private lazy val q151Root: java.nio.file.Path =
-    java.nio.file.Files.createTempDirectory("graft-q151")
-
-  /** q156's per-JVM warehouse root — same stable-path discipline. */
-  private lazy val q156Root: java.nio.file.Path =
-    java.nio.file.Files.createTempDirectory("graft-q156")
-
-  /** q159's per-JVM warehouse root — same stable-path discipline. */
-  private lazy val q159Root: java.nio.file.Path =
-    java.nio.file.Files.createTempDirectory("graft-q159")
-
-  /** q160's per-JVM warehouse root — same stable-path discipline. */
-  private lazy val q160Root: java.nio.file.Path =
-    java.nio.file.Files.createTempDirectory("graft-q160")
-
-  /** q164's per-JVM warehouse root — same stable-path discipline. */
-  private lazy val q164Root: java.nio.file.Path =
-    java.nio.file.Files.createTempDirectory("graft-q164")
-
-  /** q161's per-JVM warehouse root — same stable-path discipline. */
-  private lazy val q161Root: java.nio.file.Path =
-    java.nio.file.Files.createTempDirectory("graft-q161")
-
-  /** q162's per-JVM warehouse root — same stable-path discipline. */
-  private lazy val q162Root: java.nio.file.Path =
-    java.nio.file.Files.createTempDirectory("graft-q162")
-
-  /** q173's per-JVM warehouse root — same stable-path discipline. */
-  private lazy val q173Root: java.nio.file.Path =
-    java.nio.file.Files.createTempDirectory("graft-q173")
-
-  // wipe: the shared stable-path helper lives in Tables (imported above)
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // P3/P4/I1: strict-> watermark scan, pushed to the parquet reader
     // (reference synthesizes `WHERE rk > w ORDER BY rk`, records.py:87-94).
@@ -436,14 +399,10 @@ object EtlQueries {
     // table at O(changed rows) per trigger with no rescan and no bespoke
     // poll loop (StreamTableReadSpec pins restart/no-re-delivery/admission).
     "q156_cdc_stream_rollup" -> { (s, dir) =>
-      import graft.sink.Warehouse
       val cust = read(s, dir, "customer")
         .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal").as("bal"))
-      wipe(q156Root)
+      val wh = stableWarehouse(s, "gq156")
       val cp = java.nio.file.Files.createTempDirectory("graft-q156cp")
-      val wh = new Warehouse(s, q156Root.toString)
-      s.conf.set("spark.sql.catalog.gq156", classOf[graft.catalog.GraftCatalog].getName)
-      s.conf.set("spark.sql.catalog.gq156.root", q156Root.toString)
       try {
         val a = cust.filter(col("c_custkey") % 3 === 0)
         val b = cust.filter(col("c_custkey") % 3 === 1)
@@ -480,7 +439,7 @@ object EtlQueries {
           .orderBy("change_type", "c_mktsegment")
           .localCheckpoint()
       } finally {
-        wipe(q156Root)
+        wipe(stableRoot("gq156"))
         wipe(cp)
       }
     },
@@ -498,14 +457,10 @@ object EtlQueries {
     // was born" at O(changed rows) per trigger — one keyed shuffle over
     // the window's changes, never the table.
     "q159_cdc_update_images" -> { (s, dir) =>
-      import graft.sink.Warehouse
       val cust = read(s, dir, "customer")
         .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal").as("bal"))
-      wipe(q159Root)
+      val wh = stableWarehouse(s, "gq159")
       val cp = java.nio.file.Files.createTempDirectory("graft-q159cp")
-      val wh = new Warehouse(s, q159Root.toString)
-      s.conf.set("spark.sql.catalog.gq159", classOf[graft.catalog.GraftCatalog].getName)
-      s.conf.set("spark.sql.catalog.gq159.root", q159Root.toString)
       try {
         val a = cust.filter(col("c_custkey") % 3 === 0)
         val b = cust.filter(col("c_custkey") % 3 === 1)
@@ -543,7 +498,7 @@ object EtlQueries {
           .orderBy("change_type", "c_mktsegment")
           .localCheckpoint()
       } finally {
-        wipe(q159Root)
+        wipe(stableRoot("gq159"))
         wipe(cp)
       }
     },
@@ -563,14 +518,10 @@ object EtlQueries {
     // knowledge — no keys to declare, no rename coordination, O(changed
     // rows) per trigger.
     "q164_cdc_lineage_images" -> { (s, dir) =>
-      import graft.sink.Warehouse
       val cust = read(s, dir, "customer")
         .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal").as("bal"))
-      wipe(q164Root)
+      val wh = stableWarehouse(s, "gq164")
       val cp = java.nio.file.Files.createTempDirectory("graft-q164cp")
-      val wh = new Warehouse(s, q164Root.toString)
-      s.conf.set("spark.sql.catalog.gq164", classOf[graft.catalog.GraftCatalog].getName)
-      s.conf.set("spark.sql.catalog.gq164.root", q164Root.toString)
       try {
         val a = cust.filter(col("c_custkey") % 3 === 0)
         wh.create("cdc", org.apache.spark.sql.types.StructType(
@@ -622,7 +573,7 @@ object EtlQueries {
           .orderBy("change_type", "c_mktsegment")
           .localCheckpoint()
       } finally {
-        wipe(q164Root)
+        wipe(stableRoot("gq164"))
         wipe(cp)
       }
     },
@@ -640,14 +591,10 @@ object EtlQueries {
     // replaying pre-evolution windows — is spec-pinned in
     // StreamTableReadSpec).
     "q160_cdc_schema_evolution" -> { (s, dir) =>
-      import graft.sink.Warehouse
       val cust = read(s, dir, "customer")
         .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal").as("bal"))
-      wipe(q160Root)
+      val wh = stableWarehouse(s, "gq160")
       val cp = java.nio.file.Files.createTempDirectory("graft-q160cp")
-      val wh = new Warehouse(s, q160Root.toString)
-      s.conf.set("spark.sql.catalog.gq160", classOf[graft.catalog.GraftCatalog].getName)
-      s.conf.set("spark.sql.catalog.gq160.root", q160Root.toString)
       try {
         val a = cust.filter(col("c_custkey") % 3 === 0)
         val b = cust.filter(col("c_custkey") % 3 === 1)
@@ -690,7 +637,7 @@ object EtlQueries {
           .orderBy("change_type", "c_mktsegment")
           .localCheckpoint()
       } finally {
-        wipe(q160Root)
+        wipe(stableRoot("gq160"))
         wipe(cp)
       }
     },
@@ -707,16 +654,12 @@ object EtlQueries {
     // At 100 TB this is the join-order/broadcast lever for every
     // retention-window and outlier-slice query.
     "q161_histogram_range_join" -> { (s, dir) =>
-      import graft.sink.Warehouse
       val cust = read(s, dir, "customer").select(col("c_custkey"), col("c_mktsegment"),
         when(col("c_custkey") % 100 === 0, lit(100000L) + col("c_custkey"))
           .otherwise(col("c_custkey") % 10).as("x"))
       val ords = read(s, dir, "orders")
         .select(col("o_custkey"), col("o_totalprice").as("price"))
-      wipe(q161Root)
-      val wh = new Warehouse(s, q161Root.toString)
-      s.conf.set("spark.sql.catalog.gq161", classOf[graft.catalog.GraftCatalog].getName)
-      s.conf.set("spark.sql.catalog.gq161.root", q161Root.toString)
+      val wh = stableWarehouse(s, "gq161")
       val confs = Seq("spark.sql.cbo.enabled" -> "true")
       val saved = confs.map { case (k, _) => k -> s.conf.getOption(k) }
       try {
@@ -734,7 +677,7 @@ object EtlQueries {
           .localCheckpoint()
       } finally {
         saved.foreach { case (k, v) => v.fold(s.conf.unset(k))(s.conf.set(k, _)) }
-        wipe(q161Root)
+        wipe(stableRoot("gq161"))
       }
     },
 
@@ -748,13 +691,9 @@ object EtlQueries {
     // shape: an auditor or point-in-time replicator reads WHO changed WHAT
     // and WHEN at O(changed rows), never replaying the table.
     "q162_cdc_attributed_rollup" -> { (s, dir) =>
-      import graft.sink.Warehouse
       val cust = read(s, dir, "customer")
         .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal").as("bal"))
-      wipe(q162Root)
-      val wh = new Warehouse(s, q162Root.toString)
-      s.conf.set("spark.sql.catalog.gq162", classOf[graft.catalog.GraftCatalog].getName)
-      s.conf.set("spark.sql.catalog.gq162.root", q162Root.toString)
+      val wh = stableWarehouse(s, "gq162")
       try {
         val a = cust.filter(col("c_custkey") % 3 === 0)
         val b = cust.filter(col("c_custkey") % 3 === 1)
@@ -773,7 +712,7 @@ object EtlQueries {
           .agg(count(lit(1)).as("cnt"), dsum(col("bal")).as("bal_delta"))
           .orderBy("commit_v", "change_type")
           .localCheckpoint()
-      } finally wipe(q162Root)
+      } finally wipe(stableRoot("gq162"))
     },
 
     // SCOPED streaming replication: a downstream consumer mirrors ONE
@@ -789,14 +728,10 @@ object EtlQueries {
     // huge table pays O(matching segments) window planning and O(matching
     // slice) staging per trigger, not the full change bag.
     "q173_cdc_scoped_stream" -> { (s, dir) =>
-      import graft.sink.Warehouse
       val cust = read(s, dir, "customer")
         .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal").as("bal"))
-      wipe(q173Root)
+      val wh = stableWarehouse(s, "gq173")
       val cp = java.nio.file.Files.createTempDirectory("graft-q173cp")
-      val wh = new Warehouse(s, q173Root.toString)
-      s.conf.set("spark.sql.catalog.gq173", classOf[graft.catalog.GraftCatalog].getName)
-      s.conf.set("spark.sql.catalog.gq173.root", q173Root.toString)
       try {
         val a = cust.filter(col("c_custkey") % 3 === 0)
         val b = cust.filter(col("c_custkey") % 3 === 1)
@@ -837,7 +772,7 @@ object EtlQueries {
           .orderBy("c_custkey")
           .localCheckpoint()
       } finally {
-        wipe(q173Root)
+        wipe(stableRoot("gq173"))
         wipe(cp)
       }
     },
@@ -973,12 +908,7 @@ object EtlQueries {
     "q151_column_default" -> { (s, dir) =>
       val cust = read(s, dir, "customer")
         .select(col("c_custkey"), col("c_acctbal").as("bal"))
-      // stable per-JVM root: Spark caches catalog plugins by name after
-      // first load, so the catalog conf must keep pointing at the same path
-      // — each run wipes the CONTENTS and rewrites (the q137 discipline)
-      wipe(q151Root)
-      s.conf.set("spark.sql.catalog.gq151", classOf[graft.catalog.GraftCatalog].getName)
-      s.conf.set("spark.sql.catalog.gq151.root", q151Root.toString)
+      stableWarehouse(s, "gq151") // the catalog only; the query is SQL
       try {
         cust.createOrReplaceTempView("q151_src")
         s.sql("CREATE TABLE gq151.cust (c_custkey BIGINT, bal DOUBLE, tier STRING DEFAULT 'basic')")
@@ -991,7 +921,7 @@ object EtlQueries {
           .agg(count(lit(1)).as("cnt"), dsum(col("bal")).as("bal_sum"))
           .orderBy(col("tier").asc) // Spark asc = NULLS FIRST; oracle matches
           .localCheckpoint()
-      } finally wipe(q151Root)
+      } finally wipe(stableRoot("gq151"))
     },
 
     // F1/F2: timestamp canonicalization — epoch-millis <-> native timestamp

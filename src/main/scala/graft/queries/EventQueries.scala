@@ -25,13 +25,6 @@ object EventQueries {
   private def events(s: SparkSession, dir: String): DataFrame =
     graft.schema.SchemaOps.normalizeNanos(read(s, dir, "events"), Seq("ts"))
 
-  /** Stable per-JVM catalog root for q168 (Spark caches catalog plugins by
-    * name, so the conf must keep pointing at one path — the q137/q151
-    * discipline: wipe CONTENTS per run, never move the root).
-    */
-  private lazy val q168Root: java.nio.file.Path =
-    java.nio.file.Files.createTempDirectory("graft-q168")
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // get_json_object over the props JSON column (engine side); the oracle
     // extracts the same value by regex so it never depends on a DuckDB
@@ -610,15 +603,11 @@ object EventQueries {
     // "events where props.k in a band" stops reading the 90% of a
     // k-clustered table outside the band.
     "q168_variant_prune_scan" -> { (s, dir) =>
-      import graft.sink.Warehouse
-      wipe(q168Root)
-      s.conf.set("spark.sql.catalog.gq168", classOf[graft.catalog.GraftCatalog].getName)
-      s.conf.set("spark.sql.catalog.gq168.root", q168Root.toString)
+      val wh = stableWarehouse(s, "gq168")
       try {
         val ev = events(s, dir)
           .select(col("event_id"), col("event_type"), parse_json(col("props")).as("props"))
           .repartitionByRange(16, variant_get(col("props"), "$.k", "long"))
-        val wh = new Warehouse(s, q168Root.toString)
         wh.create("events_v", ev.schema)
         wh.append("events_v", ev, statsCols = Seq("vget(props,$.k,long)"))
         s.sql("REFRESH TABLE gq168.events_v")
@@ -630,7 +619,7 @@ object EventQueries {
             |WHERE variant_get(props, '$.k', 'long') BETWEEN 10 AND 19
             |GROUP BY event_type ORDER BY event_type""".stripMargin)
           .localCheckpoint()
-      } finally wipe(q168Root)
+      } finally wipe(stableRoot("gq168"))
     }
   )
 

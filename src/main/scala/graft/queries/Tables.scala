@@ -74,8 +74,7 @@ object Tables {
 
   /** Wipe a per-JVM warehouse root's CONTENTS, keeping the directory itself
     * (catalog plugins are cached by name after first load, so the root conf
-    * must keep pointing at the same path) — the one shared implementation
-    * of the stable-path discipline every temp-catalog query uses.
+    * must keep pointing at the same path).
     */
   private[queries] def wipe(p: java.nio.file.Path): Unit =
     if (java.nio.file.Files.exists(p)) {
@@ -83,4 +82,32 @@ object Tables {
       java.nio.file.Files.walk(p).sorted(java.util.Comparator.reverseOrder())
         .iterator().asScala.filter(_ != p).foreach(java.nio.file.Files.deleteIfExists(_))
     }
+
+  private val stableRoots =
+    new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
+
+  /** The per-JVM STABLE scratch root named `key`, created on first use and
+    * never moved — the one implementation of the stable-path discipline
+    * every temp-catalog query uses: Spark caches a catalog plugin by name
+    * after its first load, so a fresh temp dir per run would silently keep
+    * reading the old root. Runs wipe the CONTENTS instead ([[wipe]]).
+    */
+  private[queries] def stableRoot(key: String): java.nio.file.Path =
+    stableRoots.computeIfAbsent(key,
+      k => java.nio.file.Files.createTempDirectory(s"graft-$k"))
+
+  /** A warehouse over `key`'s wiped stable root; with `catalog`, also
+    * registered as the Spark catalog named `key` (SQL reaches it as
+    * `key.<table>`).
+    */
+  private[queries] def stableWarehouse(s: SparkSession, key: String,
+                                       catalog: Boolean = true): graft.sink.Warehouse = {
+    val root = stableRoot(key)
+    wipe(root)
+    if (catalog) {
+      s.conf.set(s"spark.sql.catalog.$key", classOf[graft.catalog.GraftCatalog].getName)
+      s.conf.set(s"spark.sql.catalog.$key.root", root.toString)
+    }
+    new graft.sink.Warehouse(s, root.toString)
+  }
 }

@@ -45,9 +45,9 @@ import graft.functions.TextFns
   * therefore converges to the fully-committed state, whichever commit the
   * crash interrupted.
   */
-final class NearDupIngest(wh: Warehouse, pkCol: String, textCol: String,
-                          shingleW: Int = 3, k: Int = 16, bands: Int = 4,
-                          simT: Double = 0.5) {
+final class NearDupIngest(protected val wh: Warehouse, protected val pkCol: String,
+                          textCol: String, shingleW: Int = 3, k: Int = 16, bands: Int = 4,
+                          simT: Double = 0.5) extends IndexFamily {
   require(k % bands == 0, s"bands ($bands) must divide k ($k)")
   private val r = k / bands
   // k hash functions cost k/CHUNK md5 calls per shingle (q57's slicing)
@@ -58,8 +58,9 @@ final class NearDupIngest(wh: Warehouse, pkCol: String, textCol: String,
   // positions that must agree for estimated Jaccard >= simT
   private val minMatches = math.ceil(simT * k).toInt
 
-  final case class Report(version: Long, appended: Long,
-    dupInBatch: Long, dupVsCorpus: Long)
+  type Report = NearDupIngest.Report
+
+  private[graft] def streamId = "neardup"
 
   private def bandsTable(name: String) = s"${name}__bands"
   private def sigsTable(name: String) = s"${name}__sigs"
@@ -69,77 +70,41 @@ final class NearDupIngest(wh: Warehouse, pkCol: String, textCol: String,
   // salted md5 → 8-hex substrings of chunk-salted md5): old and new sigs
   // never compare equal and never share band keys, so an index mixing eras
   // SILENTLY finds no cross-era pairs and re-admits near-dups of pre-change
-  // content. Every entry point therefore checks a format stamp on the sigs
-  // table (ridden on the batch-id ledger — one atomic pointer file) and
-  // refuses loudly on mismatch instead of degrading. The stamp encodes the
-  // format generation AND the signing parameters (shingleW, k, bands):
-  // a parameter change has the identical silent-mixing failure mode.
-  private val SigFmtSid = "sigformat"
+  // content. The stamp on the sigs table encodes the format generation AND
+  // the signing parameters (shingleW, k, bands): a parameter change has the
+  // identical silent-mixing failure mode.
+  protected def stampTable(name: String) = sigsTable(name)
+  protected def stampId = "sigformat"
   /** Format generation 2 = the flat chunk-salted-md5 shape of [[signed]]. */
-  private[sink] val formatStamp: Long =
-    (2L << 48) | (shingleW.toLong << 32) | (k.toLong << 16) | bands.toLong
+  private[sink] val formatStamp: Long = IndexFamily.pack(2L, shingleW, k, bands)
 
-  private def formatGuard(name: String): Unit = {
-    if (!wh.exists(sigsTable(name))) return
-    val got = wh.lastCommittedBatchId(sigsTable(name), SigFmtSid)
-    if (got == formatStamp) return
-    if (got < 0) {
-      // a stampless sigs table with ZERO committed rows is a freshly-created
-      // index (possibly a crash between create and stamp) — no signatures
-      // exist, so no cross-era mixing is possible; the entry points stamp
-      // before committing any rows
-      val man = wh.currentManifest(sigsTable(name))
-      if (man.files.isEmpty && man.deletes.isEmpty) return
-    }
-    if (got < 0) throw new IllegalStateException(
-      s"near-dup index for '$name' carries no signature-format stamp — it was " +
-        "built before format stamping (possibly with the old per-position-salted " +
-        "signature shape, which never matches current signatures). Rebuild the " +
-        "index (drop the __sigs/__bands tables and followChanges/ingest afresh), " +
-        "or, if it was provably built with the CURRENT format and parameters, " +
-        "adopt it explicitly with adoptFormat(name).")
-    else {
-      val g = got >> 48; val w = (got >> 32) & 0xffff
-      val gk = (got >> 16) & 0xffff; val gb = got & 0xffff
-      throw new IllegalStateException(
-        s"near-dup index for '$name' was built with an incompatible signature " +
-          s"format (generation $g, shingleW=$w, k=$gk, bands=$gb; this instance: " +
-          s"generation 2, shingleW=$shingleW, k=$k, bands=$bands). Cross-era " +
-          "signatures never match and band keys never collide, so pairs would be " +
-          "silently lost. Rebuild the index, or construct NearDupIngest with the " +
-          "index's parameters.")
-    }
+  protected def noStampError(name: String) =
+    s"near-dup index for '$name' carries no signature-format stamp — it was " +
+      "built before format stamping (possibly with the old per-position-salted " +
+      "signature shape, which never matches current signatures). Rebuild the " +
+      "index (drop the __sigs/__bands tables and followChanges/ingest afresh), " +
+      "or, if it was provably built with the CURRENT format and parameters, " +
+      "adopt it explicitly with adoptFormat(name)."
+
+  protected def mismatchError(name: String, got: Long) = {
+    val (g, w, gk, gb) = IndexFamily.unpack(got)
+    s"near-dup index for '$name' was built with an incompatible signature " +
+      s"format (generation $g, shingleW=$w, k=$gk, bands=$gb; this instance: " +
+      s"generation 2, shingleW=$shingleW, k=$k, bands=$bands). Cross-era " +
+      "signatures never match and band keys never collide, so pairs would be " +
+      "silently lost. Rebuild the index, or construct NearDupIngest with the " +
+      "index's parameters."
   }
 
-  /** Stamp a fresh (or explicitly adopted) index with this instance's
-    * format. Idempotent; no-op while the sigs table does not exist yet.
-    */
-  private def stampFormat(name: String): Unit =
-    if (wh.exists(sigsTable(name)) &&
-        wh.lastCommittedBatchId(sigsTable(name), SigFmtSid) != formatStamp)
-      wh.recordBatchId(sigsTable(name), SigFmtSid, formatStamp)
+  protected def noIndexError(name: String) = s"no near-dup index for table: $name"
 
-  /** Create-then-stamp, BEFORE any signature rows commit: a crash at any
-    * later point leaves a stamped index, never a committed-but-stampless
-    * one that [[formatGuard]] would permanently refuse (the round-17
-    * after-commit stamping left exactly that window). A crash between
-    * create and stamp leaves an EMPTY stampless table, which the guard
-    * recognizes as fresh.
-    */
-  private def ensureStamped(name: String, sigSchema: org.apache.spark.sql.types.StructType): Unit = {
-    if (!wh.exists(sigsTable(name))) wh.create(sigsTable(name), sigSchema)
-    stampFormat(name)
-  }
+  protected def ledgerTable(name: String) = bandsTable(name)
+  protected def retractTables(name: String) = Seq(bandsTable(name), sigsTable(name))
+  protected def compactKeys(name: String) =
+    Seq(bandsTable(name) -> "band_key", sigsTable(name) -> pkCol)
 
-  /** Operator override for a pre-stamp index KNOWN to be in this instance's
-    * exact format and parameters: records the stamp so the guard passes.
-    * Misuse reintroduces the silent cross-era mixing the guard exists to
-    * prevent — only adopt an index whose build provenance is certain.
-    */
-  def adoptFormat(name: String): Unit = {
-    require(wh.exists(sigsTable(name)), s"no near-dup index for table: $name")
-    stampFormat(name)
-  }
+  protected def checkFollow(name: String): Unit =
+    require(wh.exists(name), s"no corpus table: $name")
 
   /** (pk, sig, bands) for a batch — q57's FLAT salted-md5 minhash shape:
     * explode the distinct shingles, compute `salts` md5 columns per row as
@@ -177,98 +142,25 @@ final class NearDupIngest(wh: Warehouse, pkCol: String, textCol: String,
   private def sigMatches(a: Column, b: Column): Column =
     size(filter(zip_with(a, b, (x, y) => x === y), m => m))
 
-  def ingest(name: String, df: DataFrame): Report = {
-    formatGuard(name)
-    val preV = if (wh.exists(name)) wh.currentVersion(name) else -1L
-    val st = stage(name, df)
-    try {
-      ensureStamped(name, st.newSigs.schema)
-      wh.append(sigsTable(name), st.newSigs, statsCols = Seq(pkCol))
-      wh.append(bandsTable(name), st.newBands, statsCols = Seq("band_key"))
-      val version = wh.append(name, st.outRows, statsCols = Seq(pkCol))
-      advanceFollowerLedger(name, preV)
-      Report(version, st.appended, st.total - st.kept, st.kept - st.appended)
-    } finally st.sigs.unpersist()
+  /** Sign `rows` and stage its NEW pks' signature + band rows. */
+  protected def stageIndex(name: String, rows: DataFrame): Seq[IndexFamily.Append] = {
+    val s = signed(rows).persist() // consumers: sig rows + band rows
+    try indexOf(name, s) finally s.unpersist()
   }
 
-  /** [[IndexFollower.advance]] on the bands table — the shared ledger
-    * discipline (head == preAppendVersion + 1, judged on the head).
+  /** Sig + band appends of a signed frame, idempotent by pk (anti-joins
+    * through the MOR overlay, so a pk whose rows [[followChanges]] just
+    * retracted re-signs cleanly). Sigs before bands: a band row without its
+    * signature is a probe hit that cannot verify; the reverse is inert.
     */
-  private[graft] def advanceFollowerLedger(name: String, preAppendVersion: Long): Unit =
-    IndexFollower.advance(wh, name, bandsTable(name), preAppendVersion)
-
-  /** Sign `df` and append its NEW pks' signature + band rows — idempotent
-    * by pk (anti-join against the stored pks through the MOR overlay, so a
-    * pk whose rows [[followChanges]] just retracted re-signs cleanly).
-    * The index-maintenance middle shared by the follower. Returns docs
-    * signed.
-    */
-  private def indexRows(name: String, df: DataFrame): Long = {
-    val s = signed(df).persist() // consumers: sig rows + band rows
-    try {
-      val sigRows = s.select(col(pkCol), col("sig"))
-      // localCheckpoint: counted after the commit, and the anti-join must
-      // not re-plan against the table AFTER its own append lands
-      val newSigs = (
-        if (!wh.exists(sigsTable(name))) sigRows
-        else sigRows.join(wh.load(sigsTable(name)).select(col(pkCol)),
-          Seq(pkCol), "left_anti")
-        ).localCheckpoint()
-      val bandRows = s.select(col(pkCol),
-        posexplode(col("bands")).as(Seq("band_idx", "band_key")))
-      val newBands = (
-        if (!wh.exists(bandsTable(name))) bandRows
-        else bandRows.join(wh.load(bandsTable(name)).select(col(pkCol)).distinct(),
-          Seq(pkCol), "left_anti")
-        ).localCheckpoint()
-      // sigs before bands: a band row without its signature is a probe hit
-      // that cannot verify; the reverse order is inert (ingest's discipline)
-      ensureStamped(name, newSigs.schema)
-      wh.append(sigsTable(name), newSigs, statsCols = Seq(pkCol))
-      wh.append(bandsTable(name), newBands, statsCols = Seq("band_key"))
-      newSigs.count()
-    } finally s.unpersist()
-  }
-
-  final case class FollowReport(corpusVersion: Long, deletedDocs: Long, indexedDocs: Long)
-
-  /** INCREMENTAL INDEX MAINTENANCE from the corpus change feed — the
-    * near-dup member of the follower family ([[SearchIndexIngest]] BM25,
-    * [[VectorIndexIngest]] ANN): corpus deletes/update-retractions become
-    * ONE equality-delete commit per index table keyed by pk (O(changed pks)
-    * metadata, zero band/signature rewrites), and inserted/updated rows
-    * re-sign through the idempotent index path — an updated doc's stale
-    * signature can no longer emit phantom candidate pairs, and a deleted
-    * doc stops suppressing future near-dups of its content at the ingest
-    * probe. The consumed corpus window rides the `idxfollow:<name>` batch
-    * ledger on the bands table (recorded by [[ingest]] too), so
-    * crashed/replayed calls converge.
-    *
-    * Bootstrap: a corpus that was never ingested through this class (plain
-    * appends/merges) indexes WHOLESALE on the first call — the ledger is
-    * unset and the whole current snapshot is treated as insertions. As with
-    * the sibling followers, rows deleted BEFORE that first call were never
-    * indexed, so there is nothing to retract.
-    */
-  def followChanges(name: String): FollowReport = {
-    require(wh.exists(name), s"no corpus table: $name")
-    formatGuard(name)
-    IndexFollower.window(wh, name, bandsTable(name), pkCol) match {
-      case None => FollowReport(wh.currentVersion(name), 0L, 0L)
-      case Some(w) =>
-        if (w.nDel > 0) {
-          // retract BEFORE re-signing: an updated pk's fresh rows (seq > the
-          // delete's) are shielded by the strict-< rule and the re-sign
-          // anti-join sees the pk as absent
-          wh.equalityDelete(bandsTable(name), w.delPks)
-          wh.equalityDelete(sigsTable(name), w.delPks)
-        }
-        val nIns = w.ins.select(col(pkCol)).distinct().count()
-        if (nIns > 0) indexRows(name, w.ins)
-        IndexFollower.record(wh, name, bandsTable(name), w.now)
-        FollowReport(w.now, w.nDel, nIns)
-    }
-  }
+  private def indexOf(name: String, signed: DataFrame): Seq[IndexFamily.Append] = Seq(
+    IndexFamily.Append(sigsTable(name),
+      absent(sigsTable(name), signed.select(col(pkCol), col("sig"))),
+      statsCols = Seq(pkCol)),
+    IndexFamily.Append(bandsTable(name),
+      absent(bandsTable(name), signed.select(col(pkCol),
+        posexplode(col("bands")).as(Seq("band_idx", "band_key"))), distinct = true),
+      statsCols = Seq("band_key")))
 
   /** Serve the index's VERIFIED near-dup pairs: banded candidates (equi-join
     * on the stored band keys, fan-out bounded by real near-dups + LSH false
@@ -295,21 +187,6 @@ final class NearDupIngest(wh: Warehouse, pkCol: String, textCol: String,
       .select(col("d1"), col("d2"), col("n_match"))
   }
 
-  /** Compact the index tables' ingest-granularity files
-    * ([[SearchIndexIngest.compact]]'s near-dup sibling): every per-batch
-    * append lands one band-key-range file, and after many small batches
-    * their ranges overlap — each corpus probe then opens a file per batch.
-    * Compaction rewrites the small files into few DISJOINT
-    * band_key-clustered files (sigs by pk), restoring the O(probe-keys)
-    * band lookup; results are unchanged (content-preserving rewrite,
-    * spec-pinned), and pending MOR retractions from [[followChanges]]
-    * materialize in the process (the rewrite ops apply deletes).
-    */
-  def compact(name: String, smallRows: Long = 100000L): Unit = {
-    wh.compactFiles(bandsTable(name), smallRows, clusterBy = Seq("band_key"))
-    wh.compactFiles(sigsTable(name), smallRows, clusterBy = Seq(pkCol)): Unit
-  }
-
   /** Dedup DECISIONS from the maintained index — q71's connected-components
     * keeper algebra applied to [[pairs]]: every clustered doc labeled with
     * its component's MINIMUM pk (the keeper, the same deterministic rule
@@ -329,46 +206,12 @@ final class NearDupIngest(wh: Warehouse, pkCol: String, textCol: String,
         col("cluster_size"), (col("id") =!= col("comp")).as("is_dup"))
   }
 
-  /** [[ingest]] with the three appends fused into ONE [[Warehouse.transact]]
-    * unit: sigs, bands and corpus land all-or-nothing, so the crash-orphan
-    * states the commit-order discipline below exists to heal (index rows
-    * whose doc never landed, reconciled on replay by the exact-hit
-    * corpus-membership check) cannot arise on this path. Same staging, same
-    * idempotent anti-joins — mixing ingest()/ingestAtomic() on one index
-    * stays safe, and a crashed transaction commits nothing.
+  /** Ingest staging: in-batch near-dup collapse, corpus probe with orphan
+    * reconciliation, then the survivors' index appends and corpus rows.
     */
-  def ingestAtomic(name: String, df: DataFrame): Report = {
-    formatGuard(name)
-    val preV = if (wh.exists(name)) wh.currentVersion(name) else -1L
-    val st = stage(name, df)
-    try {
-      // stamp BEFORE the transaction commits: the ledger pointer is outside
-      // the transactional manifest commit, so stamping after left a window
-      // where a crash produced a committed-but-stampless index that
-      // formatGuard permanently refused
-      ensureStamped(name, st.newSigs.schema)
-      wh.transact { tx =>
-        tx.append(sigsTable(name), st.newSigs, statsCols = Seq(pkCol))
-        tx.append(bandsTable(name), st.newBands, statsCols = Seq("band_key"))
-        tx.append(name, st.outRows, statsCols = Seq(pkCol))
-      }
-      advanceFollowerLedger(name, preV)
-      Report(wh.currentVersion(name), st.appended, st.total - st.kept,
-        st.kept - st.appended)
-    } finally st.sigs.unpersist()
-  }
-
-  /** Everything up to (but excluding) the commits: in-batch near-dup
-    * collapse, corpus probe with orphan reconciliation, and the deduped
-    * index/corpus frames ready to land under either commit discipline.
-    * `sigs` stays persisted — the frames reference it; callers unpersist.
-    */
-  private final case class Staged(sigs: DataFrame, newSigs: DataFrame,
-    newBands: DataFrame, outRows: DataFrame, total: Long, kept: Long, appended: Long)
-
-  private def stage(name: String, df: DataFrame): Staged = {
-    val total = df.count()
-    val sigs = signed(df).persist() // consumers: in-batch pairs, corpus probe, survivor joins
+  protected def stage(name: String, batch: DataFrame): IndexFamily.Staged[Report] = {
+    val total = batch.count()
+    val sigs = signed(batch).persist() // consumers: in-batch pairs, corpus probe, survivor joins
     try {
       // ---- in-batch near-dup: banded candidate pairs -> estimated Jaccard
       // -> connected components -> min-pk keeper per component.
@@ -435,9 +278,9 @@ final class NearDupIngest(wh: Warehouse, pkCol: String, textCol: String,
       val keptCount = kept.select(pkCol).count()
       val appended = survivors.count()
 
-      // ---- three O(batch) appends (built here, committed by the caller):
+      // ---- three O(batch) appends (committed by the shared lifecycle):
       // `ingest` lands them INDEX TABLES FIRST (sigs, then bands), corpus
-      // last. Index-first means a crash before the corpus commit leaves
+      // last; the corpus rule is the survivors themselves. Index-first means a crash before the corpus commit leaves
       // orphan index rows, which the reconciliation above heals on replay;
       // corpus-first would instead leave admitted docs INVISIBLE to the
       // index — a silent recall hole where their future near-dups sail in.
@@ -448,20 +291,14 @@ final class NearDupIngest(wh: Warehouse, pkCol: String, textCol: String,
       // index rows partially or fully survived the crash, and the index
       // must not accrete duplicates for them. (`ingestAtomic` makes the
       // ordering moot — all three land in one transaction.)
-      val survSigs = sigs.join(survivors, Seq(pkCol))
-      val newSigs0 = survSigs.select(col(pkCol), col("sig"))
-      val newSigs =
-        if (!wh.exists(sigsTable(name))) newSigs0
-        else newSigs0.join(wh.load(sigsTable(name)).select(col(pkCol)),
-          Seq(pkCol), "left_anti")
-      val newBands0 = survSigs
-        .select(col(pkCol), posexplode(col("bands")).as(Seq("band_idx", "band_key")))
-      val newBands =
-        if (!wh.exists(bandsTable(name))) newBands0
-        else newBands0.join(wh.load(bandsTable(name)).select(col(pkCol)).distinct(),
-          Seq(pkCol), "left_anti")
-      val outRows = df.join(survivors, Seq(pkCol))
-      Staged(sigs, newSigs, newBands, outRows, total, keptCount, appended)
-    } catch { case t: Throwable => sigs.unpersist(); throw t }
+      val index = indexOf(name, sigs.join(survivors, Seq(pkCol)))
+      IndexFamily.Staged(index, batch.join(survivors, Seq(pkCol)),
+        v => NearDupIngest.Report(v, appended, total - keptCount, keptCount - appended))
+    } finally sigs.unpersist()
   }
+}
+
+object NearDupIngest {
+  final case class Report(version: Long, appended: Long,
+    dupInBatch: Long, dupVsCorpus: Long)
 }

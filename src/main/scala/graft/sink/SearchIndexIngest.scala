@@ -28,27 +28,25 @@ import graft.functions.TextFns
   *     change feed: O(batch) per ingest, ledger-idempotent across replays,
   *     and the BM25 normalizer never rescans doclens.
   *
-  * Commit order and replay safety follow [[NearDupIngest]]'s discipline:
-  * index tables first (postings, doclens, then the ledger-guarded rollup),
-  * corpus LAST, every index append IDEMPOTENT BY PK (anti-join against the
-  * stored pks) and the corpus append deduplicated by pk
-  * ([[Warehouse.appendDeduped]]) — so replaying a batch after a crash at
-  * ANY commit boundary converges to the fully-committed state and no table
-  * accretes duplicates. An orphan posting (index committed, corpus append
-  * lost, batch never replayed) can surface a pk [[search]] scores but the
-  * corpus lacks — callers that must not see them pass
+  * Commit order, replay safety, format stamping and change-feed following
+  * are the shared [[IndexFamily]] lifecycle (postings, doclens, the
+  * ledger-guarded rollup, corpus LAST). An orphan posting (index committed,
+  * corpus append lost, batch never replayed) can surface a pk [[search]]
+  * scores but the corpus lacks — callers that must not see them pass
   * `confirmed = true` to semi-join results against corpus membership (one
-  * pk-pruned column probe), the same reconciliation trade NearDupIngest
-  * makes.
+  * pk-pruned column probe).
   *
   * BM25 scoring matches q113 bit-for-bit: same rational-idf form (no
   * `log()`), per-term parts summed left-to-right in ONE fixed-order per-row
   * expression over term-pivoted tf columns — never a float SUM over posting
   * rows, whose accumulation order is partition-dependent.
   */
-final class SearchIndexIngest(wh: Warehouse, pkCol: String, textCol: String) {
+final class SearchIndexIngest(protected val wh: Warehouse, protected val pkCol: String,
+                              textCol: String) extends IndexFamily {
 
-  final case class Report(version: Long, docs: Long, postings: Long)
+  type Report = SearchIndexIngest.Report
+
+  private[graft] def streamId = "searchindex"
 
   private def postingsTable(name: String) = s"${name}__postings"
   private def doclensTable(name: String) = s"${name}__doclens"
@@ -62,182 +60,44 @@ final class SearchIndexIngest(wh: Warehouse, pkCol: String, textCol: String) {
       org.apache.spark.sql.types.DataTypes.createDecimalType(28, 0)), "total_dl")))
 
   // ---- tokenizer-format stamp -------------------------------------------
-  // [[NearDupIngest]]'s signature stamp, applied to the postings family: a
-  // change to the tokenization algebra ([[TextFns.TokenizerGeneration]])
+  // A change to the tokenization algebra ([[TextFns.TokenizerGeneration]])
   // makes stored postings silently mismatch query-side tokens — searches
   // under-score pre-change documents and dedup-by-terms misses them, with
-  // no error anywhere. The stamp rides the postings table's batch-id
-  // ledger; every entry point refuses loudly on mismatch. Stamped BEFORE
-  // any posting rows commit (create-then-stamp), so a committed index is
-  // never stampless; an EMPTY stampless postings table (crash between
-  // create and stamp) reads as fresh.
-  private val FmtSid = "idxformat"
-  private[sink] val formatStamp: Long = graft.functions.TextFns.TokenizerGeneration
+  // no error anywhere. The stamp rides the postings table's ledger.
+  protected def stampTable(name: String) = postingsTable(name)
+  protected def stampId = "idxformat"
+  private[sink] val formatStamp: Long = TextFns.TokenizerGeneration
 
-  private def formatGuard(name: String): Unit = {
-    if (!wh.exists(postingsTable(name))) return
-    val got = wh.lastCommittedBatchId(postingsTable(name), FmtSid)
-    if (got == formatStamp) return
-    if (got < 0) {
-      val man = wh.currentManifest(postingsTable(name))
-      if (man.files.isEmpty && man.deletes.isEmpty) return // fresh, pre-stamp crash
-      throw new IllegalStateException(
-        s"search index for '$name' carries no tokenizer-format stamp — it was " +
-          "built before format stamping. If it was provably built with the " +
-          "CURRENT tokenizer generation, adopt it explicitly with " +
-          "adoptFormat(name); otherwise rebuild the index (drop the " +
-          "__postings/__doclens/__cstats tables and re-ingest).")
-    }
-    throw new IllegalStateException(
-      s"search index for '$name' was built with tokenizer generation $got; this " +
-        s"build tokenizes at generation $formatStamp. Stored postings would " +
-        "silently mismatch query-side tokens (under-scored or missed documents), " +
-        "so the index must be rebuilt (re-ingest), not mixed.")
-  }
+  protected def noStampError(name: String) =
+    s"search index for '$name' carries no tokenizer-format stamp — it was " +
+      "built before format stamping. If it was provably built with the " +
+      "CURRENT tokenizer generation, adopt it explicitly with " +
+      "adoptFormat(name); otherwise rebuild the index (drop the " +
+      "__postings/__doclens/__cstats tables and re-ingest)."
 
-  private def ensureStamped(name: String,
-      postsSchema: org.apache.spark.sql.types.StructType): Unit = {
-    if (!wh.exists(postingsTable(name))) wh.create(postingsTable(name), postsSchema)
-    if (wh.lastCommittedBatchId(postingsTable(name), FmtSid) != formatStamp)
-      wh.recordBatchId(postingsTable(name), FmtSid, formatStamp)
-  }
+  protected def mismatchError(name: String, got: Long) =
+    s"search index for '$name' was built with tokenizer generation $got; this " +
+      s"build tokenizes at generation $formatStamp. Stored postings would " +
+      "silently mismatch query-side tokens (under-scored or missed documents), " +
+      "so the index must be rebuilt (re-ingest), not mixed."
 
-  /** Operator override for a pre-stamp index KNOWN to be tokenized at the
-    * current generation: records the stamp so the guard passes. Misuse
-    * reintroduces the silent cross-era mixing the guard prevents.
-    */
-  def adoptFormat(name: String): Unit = {
-    require(wh.exists(postingsTable(name)), s"no search index for table: $name")
-    wh.recordBatchId(postingsTable(name), FmtSid, formatStamp)
-  }
+  protected def noIndexError(name: String) = s"no search index for table: $name"
 
-  /** Tokenize `df` and append its NEW pks' postings + doclens rows
-    * (idempotent by pk — the shared middle of [[ingest]] and
-    * [[followChanges]]). Returns the posting rows appended.
-    */
-  private def indexRows(name: String, df: DataFrame): Long = {
-    // one tokenization pass feeds postings AND doclens
-    val toks = df.select(col(pkCol), TextFns.tokens(col(textCol)).as("tk"))
-      .select(col(pkCol), col("tk"), size(col("tk")).cast("long").as("dl"))
-      .persist()
-    try {
-      val posts = toks
-        .select(col(pkCol), col("dl"), explode(col("tk")).as("term"))
-        .groupBy(col("term"), col(pkCol), col("dl"))
-        .agg(count(lit(1)).as("tf"))
-        .select(col("term"), col(pkCol), col("tf"), col("dl"))
-      // localCheckpoint: counted after the commit below, and the anti-join
-      // must not re-plan against the table AFTER its own append lands (it
-      // would then see every batch pk as already present)
-      val newPosts = (
-        if (!wh.exists(postingsTable(name))) posts
-        else posts.join(wh.load(postingsTable(name)).select(col(pkCol)).distinct(),
-          Seq(pkCol), "left_anti")
-        ).localCheckpoint()
-      // clusterBy term: postings land range-sorted on the term, so each
-      // file's [min,max] term stats are TIGHT and the search-time manifest
-      // prune touches ~query-terms/term-range files, not every batch's
-      ensureStamped(name, newPosts.schema)
-      wh.append(postingsTable(name), newPosts,
-        statsCols = Seq("term", pkCol), clusterBy = Seq("term"))
+  protected def ledgerTable(name: String) = postingsTable(name)
+  protected def retractTables(name: String) = Seq(postingsTable(name), doclensTable(name))
+  protected def compactKeys(name: String) = Seq(postingsTable(name) -> "term")
 
-      val lens = toks.select(col(pkCol), col("dl"))
-      val newLens =
-        if (!wh.exists(doclensTable(name))) lens
-        else lens.join(wh.load(doclensTable(name)).select(col(pkCol)),
-          Seq(pkCol), "left_anti")
-      wh.append(doclensTable(name), newLens, statsCols = Seq(pkCol))
-      // change-feed-driven (not the append-only file feed): doclens MUTATES
-      // once followChanges deletes from it, and the signed fold subtracts
-      // deleted docs' contributions exactly; identical folds on pure appends
-      IncrementalRollup.maintainFromChangeFeed(wh, doclensTable(name),
-        cstatsTable(name), statsSpec)
-      newPosts.count()
-    } finally toks.unpersist()
-  }
-
-  /** Ingest one batch: maintain postings/doclens/cstats, then append the
-    * batch rows to the corpus. All commits are O(batch).
-    */
-  def ingest(name: String, df: DataFrame): Report = {
-    formatGuard(name)
-    val preV = if (wh.exists(name)) wh.currentVersion(name) else -1L
-    val postings = indexRows(name, df)
-    val rep = wh.appendDeduped(name, df, fpCol = pkCol, pk = pkCol,
-      statsCols = Seq(pkCol))
-    advanceFollowerLedger(name, preV)
-    Report(rep.version, rep.appended, postings)
-  }
-
-  /** [[IndexFollower.advance]] on the postings table — the shared ledger
-    * discipline (head == preAppendVersion + 1, judged on the head; see the
-    * object doc for why foreign commits landing DURING an ingest stay in
-    * the next followChanges window).
-    */
-  private[graft] def advanceFollowerLedger(name: String, preAppendVersion: Long): Unit =
-    IndexFollower.advance(wh, name, postingsTable(name), preAppendVersion)
-
-  final case class FollowReport(corpusVersion: Long, deletedDocs: Long, indexedDocs: Long)
-
-  /** INCREMENTAL INDEX MAINTENANCE from the corpus change feed — closes the
-    * loop between a MUTATING corpus and its warehouse-resident index
-    * without a blue/green rebuild: deletes/update-retractions on the corpus
-    * (morMerge, deleteWhere, equality deletes) become equality-delete
-    * commits on postings/doclens keyed by pk (O(changed pks) metadata, zero
-    * posting rewrites — the MOR discipline), and inserted/updated rows
-    * re-index through the same idempotent path ingests use. The corpus
-    * window consumed is tracked in the warehouse batch ledger (streamId
-    * `idxfollow:<name>`, recorded by [[ingest]] too), so crashed/replayed
-    * calls converge: re-deleting deleted pks is a no-op overlay, re-indexing
-    * anti-joins to empty. The cstats rollup follows through its own signed
-    * change-feed fold.
-    *
-    * First call on an index built BEFORE this ledger existed treats the
-    * whole current corpus as insertions — already-indexed pks no-op, but
-    * postings of rows deleted before that first call are NOT retracted
-    * (shield with `search(confirmed = true)`, or rebuild).
-    */
-  def followChanges(name: String): FollowReport = {
+  protected def checkFollow(name: String): Unit =
     require(wh.exists(postingsTable(name)),
       s"no search index for table: $name (ingest first)")
-    formatGuard(name)
-    IndexFollower.window(wh, name, postingsTable(name), pkCol) match {
-      case None => FollowReport(wh.currentVersion(name), 0L, 0L)
-      case Some(w) =>
-        if (w.nDel > 0) {
-          // order matters: retract BEFORE re-indexing, so an updated pk's new
-          // postings (seq > the delete's) are shielded by the strict-< rule
-          // and the re-index anti-join sees the pk as absent
-          wh.equalityDelete(postingsTable(name), w.delPks)
-          wh.equalityDelete(doclensTable(name), w.delPks)
-        }
-        val nIns = w.ins.select(col(pkCol)).distinct().count()
-        if (nIns > 0) indexRows(name, w.ins)
-        // a pure-delete window still folds the doclens retraction into cstats
-        else IncrementalRollup.maintainFromChangeFeed(wh, doclensTable(name),
-          cstatsTable(name), statsSpec)
-        IndexFollower.record(wh, name, postingsTable(name), w.now)
-        FollowReport(w.now, w.nDel, nIns)
-    }
-  }
 
-  /** [[ingest]] with the three membership-bearing commits — postings,
-    * doclens, corpus — fused into ONE [[Warehouse.transact]] unit. The
-    * crash-orphan window `ingest` documents (index rows whose corpus row
-    * never landed, shielded by `confirmed = true`) does not exist here: no
-    * reader can observe a posting without its corpus row, so searches never
-    * need the reconciliation semi-join. The cstats rollup stays FEED-driven
-    * (maintained after the transaction, ledger-idempotent) — it is a
-    * derived normalizer whose one-poll lag is benign, and feed discipline
-    * keeps `ingest`/`ingestAtomic` freely mixable on one index: the ledger
-    * folds each doclens commit exactly once regardless of which path made
-    * it. Replay-safe the same way: a crashed transaction commits NOTHING,
-    * and a full re-run anti-joins to empty everywhere.
+  /** Postings + doclens of `rows` — one tokenization pass feeds both.
+    * Postings land range-CLUSTERED on `term`, so each file's [min,max] term
+    * stats are TIGHT and [[probePostings]] touches ~query-terms/term-range
+    * files, not every batch's.
     */
-  def ingestAtomic(name: String, df: DataFrame): Report = {
-    import org.apache.spark.sql.expressions.Window
-    formatGuard(name)
-    val toks = df.select(col(pkCol), TextFns.tokens(col(textCol)).as("tk"))
+  protected def stageIndex(name: String, rows: DataFrame): Seq[IndexFamily.Append] = {
+    val toks = rows.select(col(pkCol), TextFns.tokens(col(textCol)).as("tk"))
       .select(col(pkCol), col("tk"), size(col("tk")).cast("long").as("dl"))
       .persist()
     try {
@@ -246,78 +106,37 @@ final class SearchIndexIngest(wh: Warehouse, pkCol: String, textCol: String) {
         .groupBy(col("term"), col(pkCol), col("dl"))
         .agg(count(lit(1)).as("tf"))
         .select(col("term"), col(pkCol), col("tf"), col("dl"))
-      val newPosts = (
-        if (!wh.exists(postingsTable(name))) posts
-        else posts.join(wh.load(postingsTable(name)).select(col(pkCol)).distinct(),
-          Seq(pkCol), "left_anti")
-        ).localCheckpoint()
-      val lens = toks.select(col(pkCol), col("dl"))
-      val newLens = (
-        if (!wh.exists(doclensTable(name))) lens
-        else lens.join(wh.load(doclensTable(name)).select(col(pkCol)),
-          Seq(pkCol), "left_anti")
-        ).localCheckpoint()
-      // appendDeduped's algebra at STAGING time (same json-minimal keeper,
-      // same fp anti-join), so the corpus append can ride the transaction
-      val w = Window.partitionBy(pkCol)
-        .orderBy(col(pkCol).asc, to_json(struct(df.columns.map(col): _*)).asc)
-      val inBatch = df.withColumn("__keeper", row_number().over(w))
-        .filter(col("__keeper") === 1).drop("__keeper")
-      val fresh = (
-        if (!wh.exists(name)) inBatch
-        else inBatch.join(wh.load(name).select(pkCol).distinct(), Seq(pkCol), "left_anti")
-        ).localCheckpoint()
-      val preV = if (wh.exists(name)) wh.currentVersion(name) else -1L
-      // stamp BEFORE the transaction commits (the ledger pointer is outside
-      // the transactional manifest commit — see NearDupIngest.ingestAtomic)
-      ensureStamped(name, newPosts.schema)
-      wh.transact { tx =>
-        tx.append(postingsTable(name), newPosts,
-          statsCols = Seq("term", pkCol), clusterBy = Seq("term"))
-        tx.append(doclensTable(name), newLens, statsCols = Seq(pkCol))
-        tx.append(name, fresh, statsCols = Seq(pkCol))
-      }
-      IncrementalRollup.maintainFromChangeFeed(wh, doclensTable(name),
-        cstatsTable(name), statsSpec)
-      advanceFollowerLedger(name, preV)
-      Report(wh.currentVersion(name), fresh.count(), newPosts.count())
+      Seq(
+        IndexFamily.Append(postingsTable(name),
+          absent(postingsTable(name), posts, distinct = true),
+          statsCols = Seq("term", pkCol), clusterBy = Seq("term")),
+        IndexFamily.Append(doclensTable(name),
+          absent(doclensTable(name), toks.select(col(pkCol), col("dl"))),
+          statsCols = Seq(pkCol)))
     } finally toks.unpersist()
   }
 
-  /** Compact the postings table's ingest-granularity files
-    * ([[Warehouse.compactFiles]] with `clusterBy = term`): every per-batch
-    * append lands one term-range file, and after many small batches their
-    * ranges overlap — each probe then opens a file per batch. Compaction
-    * rewrites the small files into few DISJOINT term-range files, restoring
-    * the O(query-terms) probe; search results are unchanged (spec-pinned).
-    */
-  def compact(name: String, smallRows: Long = 100000L): Long =
-    wh.compactFiles(postingsTable(name), smallRows, clusterBy = Seq("term"))
-
-  /** Postings of `terms` only: manifest-stat file pruning on the `term`
-    * column (a file is skipped when NO query term falls inside its [min,max]
-    * term range — same comparison domain as every other stat prune), then
-    * the residual `isin` filter handles row groups within kept files.
-    */
-  private[graft] def probePostings(name: String, terms: Seq[String]): DataFrame = {
-    val t = postingsTable(name)
-    val man = wh.currentManifest(t)
-    val kept = man.files.filter { f =>
-      f.stats.get("term") match {
-        case Some(ColStat("z", _, _, _)) => false
-        case Some(s) => terms.exists(q =>
-          StatsPruning.cmp(s.kind, s.min, q) <= 0 &&
-            StatsPruning.cmp(s.kind, s.max, q) >= 0)
-        case None => true // no stats recorded => cannot prune
-      }
-    }
-    // MOR overlay over the pruned subset: followChanges retracts a doc's
-    // postings as an equality delete, and a raw parquet read of the kept
-    // files would resurrect them — the overlay is exactly the corpus read
-    // path's, restricted to the files the term prune kept
-    val base = wh.morFrame(t, Manifest(man.schema, kept, man.deletes))
-    base.filter(col("term").isin(terms: _*))
+  /** Corpus rule: the batch rows whose pk the corpus lacks. */
+  protected def stage(name: String, batch: DataFrame): IndexFamily.Staged[Report] = {
+    val index = stageIndex(name, batch)
+    val fresh = absent(name, batch)
+    IndexFamily.Staged(index, fresh,
+      v => SearchIndexIngest.Report(v, fresh.count(), index.head.rows.count()))
   }
+
+  /** The cstats rollup follows the doclens CHANGE feed (not the append-only
+    * file feed): doclens mutates once followChanges deletes from it, and the
+    * signed fold subtracts deleted docs' contributions exactly. Feed- and
+    * ledger-driven, so ingest/ingestAtomic/followChanges fold each doclens
+    * commit exactly once whichever path made it.
+    */
+  override protected def afterIndex(name: String): Unit =
+    IncrementalRollup.maintainFromChangeFeed(wh, doclensTable(name),
+      cstatsTable(name), statsSpec)
+
+  /** Postings of `terms` only ([[IndexFamily.statProbe]] on `term`). */
+  private[graft] def probePostings(name: String, terms: Seq[String]): DataFrame =
+    statProbe(postingsTable(name), "term", terms)
 
   /** Top-`k` BM25 over the index: cost ∝ postings of the query terms (a
     * pruned probe), one broadcast one-row stats frame, one TakeOrdered —
@@ -374,4 +193,8 @@ final class SearchIndexIngest(wh: Warehouse, pkCol: String, textCol: String) {
       shielded.orderBy(col("bm25").desc, col(pkCol)).limit(k)
     } finally probe.unpersist()
   }
+}
+
+object SearchIndexIngest {
+  final case class Report(version: Long, docs: Long, postings: Long)
 }

@@ -47,7 +47,4 @@ object SortMarker {
     st.min.split(',').iterator
       .map(s => scala.util.Try(s.trim.toLong).toOption)
       .takeWhile(_.isDefined).map(_.get).toSeq
-
-  /** Leading sorted field id recorded in a marker stat, if parseable. */
-  def leadingId(st: ColStat): Option[Long] = ids(st).headOption
 }

@@ -90,33 +90,4 @@ object SObjectSource {
         .load()
       queryShape(df, res, watermark, limit)
     }
-
-  /** Normalization exprs (F1/F2 analogs). The reference canonicalizes Bulk-API
-    * epoch-millis and REST ISO strings to one string format
-    * (`salesforce/helpers/records.py:32-45`); the engine keeps *native*
-    * timestamps (SURVEY §7.6.3) and provides both directions as columns.
-    */
-  def epochMillisToTs(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    timestamp_millis(c.cast("long"))
-
-  def isoStringToTs(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    to_timestamp(c)
-
-  /** Canonical ISO-8601 render (UTC session) — only for display/exports, never
-    * for comparisons (the reference's `%f` strftime quirk, SURVEY §7.6.3).
-    */
-  def tsToIso(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    date_format(c, "yyyy-MM-dd'T'HH:mm:ss.SSSSSS'Z'")
-
-  /** The SOQL text the reference would have synthesized
-    * (`salesforce/helpers/records.py:87-94`) — kept for parity/debugging; the
-    * engine itself never string-builds queries, the DataFrame IS the query.
-    */
-  def soqlFor(res: ResourceDef, fields: Seq[String], watermark: Option[String], limit: Option[Int]): String = {
-    val sb = new StringBuilder(s"SELECT ${fields.mkString(", ")} FROM ${res.name}")
-    for (rk <- res.replicationKey; w <- watermark.orElse(res.initialWatermark))
-      sb.append(s" WHERE $rk > $w ORDER BY $rk ASC")
-    limit.foreach(n => sb.append(s" LIMIT $n"))
-    sb.toString
-  }
 }

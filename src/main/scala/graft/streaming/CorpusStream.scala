@@ -7,7 +7,7 @@ import org.apache.spark.sql.types.StructType
 import graft.functions.TextFns.normalize
 import graft.pipeline.CorpusPipeline
 import graft.pipeline.CorpusPipeline.Config
-import graft.sink.Warehouse
+import graft.sink.{IndexFamily, Warehouse}
 
 /** Streaming corpus curation: continuous document ingestion through the
   * CorpusPipeline admission gates into a deduplicated warehouse table.
@@ -29,6 +29,21 @@ import graft.sink.Warehouse
   */
 object CorpusStream {
 
+  type Writer = DataStreamWriter[org.apache.spark.sql.Row]
+
+  /** The shared stream shape: watch `watchDir` for parquet drops of
+    * `schema`, checkpoint under `checkpointDir` (default
+    * `<watchDir>/_checkpoint_<streamId>`), run `body` per micro-batch.
+    */
+  private def drops(spark: SparkSession, watchDir: String, schema: StructType,
+      checkpointDir: Option[String], streamId: String)(
+      body: (DataFrame, Long) => Unit): Writer =
+    spark.readStream.schema(schema).parquet(watchDir)
+      .writeStream.outputMode("append")
+      .option("checkpointLocation",
+        checkpointDir.getOrElse(s"${watchDir.stripSuffix("/")}/_checkpoint_$streamId"))
+      .foreachBatch(body)
+
   /** Watch `watchDir` for parquet document drops and ingest each micro-batch
     * through quality -> decontaminate -> fingerprint-dedup-append into
     * `table`. `evalGrams` is the pre-computed benchmark gram set
@@ -38,71 +53,40 @@ object CorpusStream {
   def ingestCurated(spark: SparkSession, watchDir: String, schema: StructType,
       wh: Warehouse, table: String, evalGrams: DataFrame,
       cfg: Config = Config(), checkpointDir: Option[String] = None,
-      streamId: String = "corpus"): DataStreamWriter[org.apache.spark.sql.Row] = {
+      streamId: String = "corpus"): Writer = {
     val grams = evalGrams.cache() // tiny by contract; reused every trigger
-    spark.readStream.schema(schema).parquet(watchDir)
-      .writeStream.outputMode("append")
-      .option("checkpointLocation",
-        checkpointDir.getOrElse(s"${watchDir.stripSuffix("/")}/_checkpoint_$streamId"))
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val q = CorpusPipeline.qualityFilter(batch, cfg)
-        val clean =
-          if (grams.isEmpty) q
-          else CorpusPipeline.decontaminateAgainstGrams(q, grams, cfg)
-        wh.appendDeduped(table,
-          clean.withColumn("fp", md5(normalize(col("text")))), "fp", "doc_id")
-        ()
-      }
+    drops(spark, watchDir, schema, checkpointDir, streamId) { (batch, _) =>
+      val q = CorpusPipeline.qualityFilter(batch, cfg)
+      val clean =
+        if (grams.isEmpty) q
+        else CorpusPipeline.decontaminateAgainstGrams(q, grams, cfg)
+      wh.appendDeduped(table,
+        clean.withColumn("fp", md5(normalize(col("text")))), "fp", "doc_id"): Unit
+    }
   }
 
-  /** [[ingestCurated]]'s NEAR-dup sibling: continuous ingestion through
-    * [[graft.sink.NearDupIngest]] — each micro-batch is LSH-checked against
-    * the warehouse's band/signature index tables, so a slightly-reworded
-    * copy of an already-admitted document is rejected in-flight, not just a
-    * byte-identical one. Same state architecture as exact dedup: the
-    * corpus-lifetime similarity index lives in WAREHOUSE TABLES (durable,
-    * shared with batch backfills), never in streaming state; a replayed
-    * micro-batch finds each doc's stored copy at signature similarity 1.0
-    * and admits 0 rows, so checkpoint loss is harmless here too.
-    */
-  def ingestNearDeduped(spark: SparkSession, watchDir: String,
-      schema: StructType, ing: graft.sink.NearDupIngest, table: String,
-      checkpointDir: Option[String] = None,
-      streamId: String = "neardup"): DataStreamWriter[org.apache.spark.sql.Row] =
-    spark.readStream.schema(schema).parquet(watchDir)
-      .writeStream.outputMode("append")
-      .option("checkpointLocation",
-        checkpointDir.getOrElse(s"${watchDir.stripSuffix("/")}/_checkpoint_$streamId"))
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        ing.ingest(table, batch)
-        ()
-      }
-
-  /** Streaming dual of [[graft.sink.SearchIndexIngest]]: each micro-batch
-    * maintains the postings/doclens/cstats index tables and then the corpus
-    * — BM25 search serves a continuously-fresh index with no rebuild. Same
-    * state architecture as the dedup streams: the index IS warehouse
-    * tables, shared with batch backfills, durable across checkpoint loss.
-    * Replay safety is the ingester's own contract (idempotent-by-pk index
-    * appends, ledger-guarded rollup, pk-deduplicated corpus), so a replayed
-    * micro-batch — same checkpoint or a rebuilt one — converges to the
-    * fully-committed state and appends nothing new.
+  /** Streaming dual of an [[IndexFamily]] ([[graft.sink.NearDupIngest]],
+    * [[graft.sink.SearchIndexIngest]], [[graft.sink.VectorIndexIngest]]):
+    * each micro-batch runs the family's ingest — index tables, then the
+    * corpus — so the index serves a continuously-fresh corpus with no
+    * rebuild (a near-dup stream rejects a slightly-reworded copy of an
+    * admitted document in-flight). Same state architecture as exact dedup:
+    * the index IS warehouse tables, shared with batch backfills and durable
+    * across checkpoint loss; replay safety is the family's own
+    * idempotent-by-pk contract, so a replayed micro-batch — same checkpoint
+    * or a rebuilt one — appends nothing new. `atomic` lands each
+    * micro-batch's index and corpus appends as ONE transaction. A vector
+    * family must be frozen before the stream starts. `streamId` defaults to
+    * the family's (`neardup`/`searchindex`/`vectorindex`).
     */
   def ingestIndexed(spark: SparkSession, watchDir: String,
-      schema: StructType, ing: graft.sink.SearchIndexIngest, table: String,
+      schema: StructType, ing: IndexFamily, table: String,
       checkpointDir: Option[String] = None,
-      streamId: String = "searchindex",
-      atomic: Boolean = false): DataStreamWriter[org.apache.spark.sql.Row] =
-    spark.readStream.schema(schema).parquet(watchDir)
-      .writeStream.outputMode("append")
-      .option("checkpointLocation",
-        checkpointDir.getOrElse(s"${watchDir.stripSuffix("/")}/_checkpoint_$streamId"))
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // atomic = each micro-batch's postings/doclens/corpus land as ONE
-        // transaction (no orphan-index crash states between commits)
-        if (atomic) ing.ingestAtomic(table, batch) else ing.ingest(table, batch)
-        ()
-      }
+      streamId: Option[String] = None,
+      atomic: Boolean = false): Writer =
+    drops(spark, watchDir, schema, checkpointDir, streamId.getOrElse(ing.streamId)) {
+      (batch, _) => if (atomic) ing.ingestAtomic(table, batch) else ing.ingest(table, batch): Unit
+    }
 
   /** Streaming CDC upsert: continuous change capture into a keyed warehouse
     * table through [[Warehouse.morMerge]] — each micro-batch lands as ONE
@@ -121,37 +105,11 @@ object CorpusStream {
   def ingestUpserts(spark: SparkSession, watchDir: String,
       schema: StructType, wh: Warehouse, table: String, pks: Seq[String],
       checkpointDir: Option[String] = None,
-      streamId: String = "upsert"): DataStreamWriter[org.apache.spark.sql.Row] =
-    spark.readStream.schema(schema).parquet(watchDir)
-      .writeStream.outputMode("append")
-      .option("checkpointLocation",
-        checkpointDir.getOrElse(s"${watchDir.stripSuffix("/")}/_checkpoint_$streamId"))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (batchId > wh.lastCommittedBatchId(table, streamId)) {
-          wh.morMerge(table, batch, pks)
-          wh.recordBatchId(table, streamId, batchId)
-        }
-        ()
+      streamId: String = "upsert"): Writer =
+    drops(spark, watchDir, schema, checkpointDir, streamId) { (batch, batchId) =>
+      if (batchId > wh.lastCommittedBatchId(table, streamId)) {
+        wh.morMerge(table, batch, pks)
+        wh.recordBatchId(table, streamId, batchId)
       }
-
-  /** Streaming dual of [[graft.sink.VectorIndexIngest]]: micro-batches of
-    * (pk, vector) rows assign + PQ-encode against the FROZEN model and land
-    * in the cell-clustered codes table, then the corpus — ANN search serves
-    * a continuously-fresh IVF-PQ index. Freezing must happen before the
-    * stream starts (the ingester refuses to run without a model); replay
-    * safety is again the ingester's own idempotent-by-pk contract.
-    */
-  def ingestVectorIndexed(spark: SparkSession, watchDir: String,
-      schema: StructType, ing: graft.sink.VectorIndexIngest, table: String,
-      checkpointDir: Option[String] = None,
-      streamId: String = "vectorindex",
-      atomic: Boolean = false): DataStreamWriter[org.apache.spark.sql.Row] =
-    spark.readStream.schema(schema).parquet(watchDir)
-      .writeStream.outputMode("append")
-      .option("checkpointLocation",
-        checkpointDir.getOrElse(s"${watchDir.stripSuffix("/")}/_checkpoint_$streamId"))
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (atomic) ing.ingestAtomic(table, batch) else ing.ingest(table, batch)
-        ()
-      }
+    }
 }

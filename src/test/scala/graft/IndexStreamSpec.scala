@@ -135,10 +135,10 @@ class IndexStreamSpec extends SparkSpec {
     val ingS = new VectorIndexIngest(whS, "id", "emb", DIM, 2, 4)
     ingS.freeze("v", cellCents, model) // model frozen BEFORE the stream starts
     vecs(0 until 8).write.mode("append").parquet(watch)
-    drain(CorpusStream.ingestVectorIndexed(spark, watch, vecSchema, ingS, "v",
+    drain(CorpusStream.ingestIndexed(spark, watch, vecSchema, ingS, "v",
       checkpointDir = Some(tmpDir("ivx-cp1"))))
     vecs(8 until 16).write.mode("append").parquet(watch)
-    drain(CorpusStream.ingestVectorIndexed(spark, watch, vecSchema, ingS, "v",
+    drain(CorpusStream.ingestIndexed(spark, watch, vecSchema, ingS, "v",
       checkpointDir = Some(tmpDir("ivx-cp2")))) // fresh checkpoint: replay + new
     assert(ingS.search("v", probes, nprobe = 2, topK = 5)
       .orderBy("probe_id", "rank").collect().toSeq == want,
@@ -147,7 +147,7 @@ class IndexStreamSpec extends SparkSpec {
       assert(whS.load(t).count() == whB.load(t).count(), s"$t diverged")
 
     val counts = Seq("v", "v__codes").map(t => whS.load(t).count())
-    drain(CorpusStream.ingestVectorIndexed(spark, watch, vecSchema, ingS, "v",
+    drain(CorpusStream.ingestIndexed(spark, watch, vecSchema, ingS, "v",
       checkpointDir = Some(tmpDir("ivx-cp3"))))
     assert(Seq("v", "v__codes").map(t => whS.load(t).count()) == counts,
       "replay must append nothing")

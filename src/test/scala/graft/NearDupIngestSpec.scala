@@ -54,6 +54,26 @@ class NearDupIngestSpec extends SparkSpec {
       Seq(1L, 2L, 12L))
   }
 
+  test("duplicate-pk batch: one survivor per pk, signed from the kept row alone") {
+    // un-deduped, a pk appearing twice was signed over the UNION of both
+    // texts and BOTH rows landed in the corpus
+    val wh = new Warehouse(spark, tmpDir("ndi-dup"))
+    val ing = ingester(wh)
+    val thirdText = (1 to 40).map(i => s"new$i").mkString(" ")
+    val r = ing.ingest("corpus", docs(1L -> baseText, 1L -> otherText, 2L -> thirdText))
+    assert(r.appended == 2, r.toString)
+    val corpus = wh.load("corpus")
+    assert(corpus.count() == 2 && corpus.select("doc_id").distinct().count() == 2)
+    assert(wh.load("corpus__sigs").count() == 2 && wh.load("corpus__bands").count() == 8)
+    // pk 1's signature is exactly its kept row's, as a clean twin signs it
+    val kept = corpus.filter(col("doc_id") === 1L).select("text").head().getString(0)
+    val twin = new Warehouse(spark, tmpDir("ndi-dup-twin"))
+    ingester(twin).ingest("corpus", docs(1L -> kept))
+    def sigOf(w: Warehouse) = w.load("corpus__sigs").filter(col("doc_id") === 1L)
+      .select("sig").head().getSeq[String](0)
+    assert(sigOf(wh) == sigOf(twin))
+  }
+
   test("replaying a batch appends nothing (retry-safe)") {
     val wh = new Warehouse(spark, tmpDir("ndi-replay"))
     val ing = ingester(wh)
@@ -361,7 +381,7 @@ class NearDupIngestSpec extends SparkSpec {
 
     def drain(checkpoint: String): Unit = {
       val q = graft.streaming.CorpusStream
-        .ingestNearDeduped(spark, watch, schema, ing, "corpus",
+        .ingestIndexed(spark, watch, schema, ing, "corpus",
           checkpointDir = Some(checkpoint))
         .trigger(Trigger.AvailableNow()).start()
       try assert(q.awaitTermination(60000), "stream did not drain in 60s")

@@ -104,6 +104,26 @@ class SearchIndexIngestSpec extends SparkSpec {
     assert(Seq("c", "c__postings", "c__doclens").map(t => wh.load(t).count()) == counts)
   }
 
+  test("duplicate-pk batch: one survivor per pk, postings and doc stats stay per-doc") {
+    // un-deduped, a pk appearing twice got postings for BOTH texts and two
+    // doclens rows (n_docs counted it twice) while the corpus kept one row
+    val wh = new Warehouse(spark, tmpDir("sii-dup"))
+    val ing = ingester(wh)
+    val rep = ing.ingest("c", docs(
+      1L -> "spark merge spark join scan", 1L -> "window rank sort order limit",
+      2L -> "merge dup merge dup filter"))
+    assert(rep.docs == 2, rep.toString)
+    val corpus = wh.load("c")
+    assert(corpus.count() == 2 && corpus.select("doc_id").distinct().count() == 2)
+    assert(wh.load("c__doclens").count() == 2)
+    val stats = graft.sink.IncrementalRollup.read(wh, "c__cstats",
+      graft.sink.IncrementalRollup.Spec(Nil, Seq(
+        graft.sink.IncrementalRollup.CountStar("n_docs")))).head()
+    assert(stats.getAs[Long]("n_docs") == 2L, stats.toString)
+    // serving state equals the corpus-scan BM25 over what the corpus kept
+    assert(ing.search("c", QUERY, k = 10).collect().toSeq == scanBm25(corpus, QUERY, 10))
+  }
+
   test("replaying a completed batch appends nothing anywhere") {
     val wh = new Warehouse(spark, tmpDir("sii-replay"))
     val ing = ingester(wh)

@@ -146,7 +146,7 @@ class VectorIndexIngestSpec extends SparkSpec {
     wh.morMerge("v", moved, Seq("id"))
     wh.deleteWhere("v", col("id").isin(7L, 14L))
     val rep = ing.followChanges("v")
-    assert(rep.deletedVecs == 3 && rep.indexedVecs == 1, rep.toString)
+    assert(rep.deletedDocs == 3 && rep.indexedDocs == 1, rep.toString)
     // the updated vector MOVED to its new direction's cell
     val postCell = wh.load("v__codes").filter(col("id") === 9L)
       .select("cell").head().getLong(0)
@@ -172,7 +172,7 @@ class VectorIndexIngestSpec extends SparkSpec {
     assert(postMan.deletes.nonEmpty, "retraction must land as delete entries")
     // idempotent
     val rep2 = ing.followChanges("v")
-    assert(rep2.deletedVecs == 0 && rep2.indexedVecs == 0)
+    assert(rep2.deletedDocs == 0 && rep2.indexedDocs == 0)
   }
 
   test("duplicate-pk batch: one survivor per pk, codes stay well-formed") {
